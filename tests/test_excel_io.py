@@ -11,6 +11,8 @@ without openpyxl in the environment.
 from __future__ import annotations
 
 import datetime
+import io
+import time
 import zipfile
 
 import pytest
@@ -65,6 +67,29 @@ def test_datetime_cells_render_iso(spark, tmp_path):
     got = read_excel_stdlib(spark, path).collect()[0]
     assert got["ts"] == "2025-03-01 12:00:05"
     assert got["d"] == "2024-12-31"
+
+
+def test_write_excel_refuses_over_cap(spark, tmp_path, monkeypatch):
+    import uofi_payroll_etl_main_spark.io as sio
+
+    monkeypatch.setattr(sio, "EXCEL_MAX_ROWS", 3)
+    path = tmp_path / "cap.xlsx"
+    sio.write_excel(spark.range(3), str(path))  # at the cap: written
+    assert path.exists()
+    with pytest.raises(ValueError, match="more than 3 rows"):
+        sio.write_excel(spark.range(4), str(tmp_path / "over.xlsx"))
+    assert not (tmp_path / "over.xlsx").exists()
+
+
+def test_xlsx_payload_is_byte_deterministic():
+    from uofi_payroll_etl_main_spark.io import XLSX_MEMBER_TIME, xlsx_payload
+
+    rows = [("1", "a"), ("2", None)]
+    first = xlsx_payload(["k", "v"], rows)
+    with zipfile.ZipFile(io.BytesIO(first)) as zf:
+        assert {m.date_time for m in zf.infolist()} == {XLSX_MEMBER_TIME}
+    time.sleep(2)  # zip timestamps have 2 s resolution
+    assert xlsx_payload(["k", "v"], rows) == first
 
 
 def test_shared_strings_reader(spark, tmp_path):

@@ -70,18 +70,29 @@ def test_broadcast_left_join_composite_key(spark):
     assert got == {1: "Exempt", 2: None}
 
 
-def test_safe_merge_left_warns_on_fanout_risk(spark, fact):
+# the guard's `on` forms: a shared key name, and {fact_key: dim_key}
+ON_FORMS = pytest.mark.parametrize("on", ["k", {"k": "dk"}], ids=["key", "mapping"])
+
+
+def _keyed(dim, on):
+    """`dim` with its key column named as `on` expects on the dim side."""
+    return dim.withColumnRenamed("k", on["k"]) if isinstance(on, dict) else dim
+
+
+@ON_FORMS
+def test_safe_merge_left_warns_on_fanout_risk(spark, fact, on):
     dim = spark.createDataFrame(
         [Row(k="1-602", t="Physics"), Row(k="1-602", t="DIFFERENT")]  # same key, two values
     )
     with pytest.warns(FanOutWarning):
-        safe_merge_left(fact, dim, "k").collect()
+        safe_merge_left(fact, _keyed(dim, on), on).collect()
 
 
-def test_safe_merge_left_quiet_when_unique(fact, dim):
+@ON_FORMS
+def test_safe_merge_left_quiet_when_unique(fact, dim, on):
     with warnings.catch_warnings():
         warnings.simplefilter("error", FanOutWarning)
-        out = safe_merge_left(fact, dim, "k")
+        out = safe_merge_left(fact, _keyed(dim, on), on)
         assert out.count() == 3
 
 

@@ -257,3 +257,53 @@ def test_cpa_caller_supplied_ingest_order(spark, dims):
     assert got[0]["Pay ID"] == "BW"
     assert got[0]["College Name"] == "Early"
     assert any("caller-supplied __ingest_order" in w for w in report.warnings)
+
+
+def _jobs_by_group(spark, build, monkeypatch):
+    """Run `build` and return {"build": n, "guard": n}: the Spark jobs it
+    started outside and inside `safe_merge_left` (which run_pua calls
+    through its own module's name).  Labels only; no behaviour changes."""
+    import uuid
+
+    import uofi_payroll_etl_main_spark.pipelines.pua as pua_mod
+    from uofi_payroll_etl_main_spark.joins import safe_merge_left as real
+
+    sc = spark.sparkContext
+    groups = {name: f"{name}-{uuid.uuid4().hex}" for name in ("build", "guard")}
+
+    def labelled(*args, **kwargs):
+        sc.setJobGroup(groups["guard"], "guard")
+        try:
+            return real(*args, **kwargs)
+        finally:
+            sc.setJobGroup(groups["build"], "build")
+
+    monkeypatch.setattr(pua_mod, "safe_merge_left", labelled)
+    sc.setJobGroup(groups["build"], "build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return {name: len(sc.statusTracker().getJobIdsForGroup(g)) for name, g in groups.items()}
+
+
+def test_build_phase_jobs(spark, dims, monkeypatch, tmp_path):
+    """Building the plans starts no Spark job, except run_pua's eager
+    dimension-uniqueness guards -- so every job of a run rides the sink's
+    action, and a new eager job in the build shows up here.  The dims
+    are file-backed: over in-memory rows a guard runs without a job."""
+    for i, dim in enumerate(dims):
+        dim.write.parquet(str(tmp_path / f"dim{i}"))
+    ts_org, ts_dept, overtime, te_m = (spark.read.parquet(str(tmp_path / f"dim{i}")) for i in range(4))
+    pua = spark.createDataFrame([_pua_row()])
+    cert = spark.createDataFrame([_cert_row()], CERT_SCHEMA)
+
+    jobs = _jobs_by_group(
+        spark, lambda: run_cpa(cert, cert, ts_org, ts_dept, overtime, te_m, fy_end_year=2025),
+        monkeypatch,
+    )
+    assert jobs == {"build": 0, "guard": 0}
+    jobs = _jobs_by_group(spark, lambda: run_pua(pua, ts_org, ts_dept, overtime, te_m), monkeypatch)
+    assert jobs["build"] == 0 and jobs["guard"] >= 3, jobs

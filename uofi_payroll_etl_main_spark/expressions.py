@@ -27,7 +27,7 @@ under a session with spark.sql.ansi.enabled in either state.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Mapping
+from collections.abc import Iterable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,7 +47,9 @@ __all__ = [
     "is_blankish",
     "null_blank_default",
     "ensure_column",
+    "renamed",
     "rename_columns",
+    "stripped_strings",
     "strip_all_strings",
     "output_contract",
     "finalize_output",
@@ -222,29 +224,32 @@ def ensure_column(df: DataFrame, name: str, dtype: str = "string") -> DataFrame:
     return df.withColumn(name, F.lit(None).cast(dtype))
 
 
-def rename_columns(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
-    """E13 -- bulk rename, tolerant of absent sources (ref :256-261,
-    :563-584).  Uses a single select so duplicate *target* names are an
+def renamed(columns: Sequence[str], mapping: Mapping[str, str]) -> list[str]:
+    """E13 -- the column names after a bulk rename, tolerant of absent
+    sources (ref :256-261, :563-584).  Duplicate *target* names are an
     immediate error instead of a latent duplicate column (SURVEY.md 7.4.7).
     """
-    out = [F.col(c).alias(mapping.get(c, c)) for c in df.columns]
-    targets = [mapping.get(c, c) for c in df.columns]
+    targets = [mapping.get(c, c) for c in columns]
     dupes = {t for t in targets if targets.count(t) > 1}
     if dupes:
         raise ValueError(f"rename would produce duplicate columns: {sorted(dupes)}")
-    return df.select(*out)
+    return targets
+
+
+def rename_columns(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
+    """E13 -- bulk rename in a single select (see `renamed`)."""
+    return df.select(*[F.col(c).alias(t) for c, t in zip(df.columns, renamed(df.columns, mapping))])
+
+
+def stripped_strings(df: DataFrame) -> dict[str, Column]:
+    """E14 -- ``{name: trimmed}`` for every string-typed column (ref
+    whole-frame strip :476-478), for a caller's own projection."""
+    return {f.name: ws_trim(f.name) for f in df.schema.fields if isinstance(f.dataType, _STRINGY)}
 
 
 def strip_all_strings(df: DataFrame) -> DataFrame:
-    """E14 -- trim every string-typed column in one projection (ref
-    whole-frame strip :476-478).  Single select -> single codegen stage."""
-    cols = []
-    for f in df.schema.fields:
-        if isinstance(f.dataType, _STRINGY):
-            cols.append(ws_trim(F.col(f.name)).alias(f.name))
-        else:
-            cols.append(F.col(f.name))
-    return df.select(*cols)
+    """E14 -- trim every string-typed column in one projection."""
+    return df.withColumns(stripped_strings(df))
 
 
 def output_contract(

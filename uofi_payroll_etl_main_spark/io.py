@@ -148,6 +148,8 @@ def write_csv_single(df: DataFrame, path: str) -> str:
 # --------------------------------------------------------------------------
 
 _XLSX_NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
+XLSX_MEMBER_TIME = (1980, 1, 1, 0, 0, 0)  # the zip format's earliest date
+EXCEL_MAX_ROWS = 1_000_000  # write_excel refuses larger frames
 
 
 def _col_letter(i: int) -> str:
@@ -327,13 +329,20 @@ def xlsx_payload(header, body_rows) -> bytes:
         '<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet1.xml"/>'
         "</Relationships>"
     )
+    parts = {
+        "[Content_Types].xml": content_types,
+        "_rels/.rels": rels,
+        "xl/workbook.xml": workbook,
+        "xl/_rels/workbook.xml.rels": wb_rels,
+        "xl/worksheets/sheet1.xml": sheet,
+    }
     buf = _io.BytesIO()
     with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("[Content_Types].xml", content_types)
-        zf.writestr("_rels/.rels", rels)
-        zf.writestr("xl/workbook.xml", workbook)
-        zf.writestr("xl/_rels/workbook.xml.rels", wb_rels)
-        zf.writestr("xl/worksheets/sheet1.xml", sheet)
+        for name, xml in parts.items():
+            # a fixed member timestamp: the same rows give the same bytes
+            member = zipfile.ZipInfo(name, XLSX_MEMBER_TIME)
+            member.external_attr = 0o600 << 16  # owner rw, as writestr(name) sets
+            zf.writestr(member, xml, zipfile.ZIP_DEFLATED)
     return buf.getvalue()
 
 
@@ -343,10 +352,10 @@ def write_excel(df: DataFrame, path: str) -> str:
     distributed many-workbook sink use df.write.format("xlsx")
     (datasources.py), which runs the same xlsx_payload kernel one file
     per partition with a rename-on-commit protocol."""
-    n = df.count()
-    if n > 1_000_000:
-        raise ValueError(f"refusing driver-side Excel write of {n} rows")
-    payload = xlsx_payload(df.columns, [tuple(r) for r in df.collect()])
+    rows = df.limit(EXCEL_MAX_ROWS + 1).collect()
+    if len(rows) > EXCEL_MAX_ROWS:
+        raise ValueError(f"refusing driver-side Excel write of more than {EXCEL_MAX_ROWS} rows")
+    payload = xlsx_payload(df.columns, [tuple(r) for r in rows])
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     with open(path, "wb") as f:
         f.write(payload)

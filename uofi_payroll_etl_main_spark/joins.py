@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import warnings
 from collections.abc import Mapping, Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -61,6 +62,16 @@ def _dim_prep(dim: DataFrame, keep_cols: Sequence[str] | None, dedup: bool) -> D
     return dim
 
 
+def _dim_keys(on: str | Sequence[str] | Mapping[str, str]) -> list[str]:
+    """The dimension-side key columns of a join's `on`, in any of the
+    three forms `broadcast_left_join` documents."""
+    if isinstance(on, str):
+        return [on]
+    if isinstance(on, Mapping):
+        return list(on.values())
+    return list(on)
+
+
 def broadcast_left_join(
     fact: DataFrame,
     dim: DataFrame,
@@ -83,24 +94,15 @@ def broadcast_left_join(
     applies dim-column renames after the join (ref :278, :492, :500).
     """
     dim = _dim_prep(dim, keep_cols, dedup_dim)
-    if isinstance(on, str):
-        cond = on
-        dim_keys: list[str] = []
-    elif isinstance(on, Mapping):
-        cond = None
-        for fk, dk in on.items():
-            clause = fact[fk] == dim[dk]
-            cond = clause if cond is None else (cond & clause)
-        dim_keys = list(on.values())
-    else:
-        cond = list(on)
-        dim_keys = []
+    if isinstance(on, Mapping):
+        cond = reduce(lambda a, b: a & b, [fact[fk] == dim[dk] for fk, dk in on.items()])
+    else:  # same-named keys: a USING join keeps one copy of each
+        cond = _dim_keys(on)
     out = fact.join(F.broadcast(dim), cond, "left")
-    if drop_dim_keys and dim_keys:
-        out = out.drop(*[dim[k] for k in dim_keys])
+    if drop_dim_keys and isinstance(on, Mapping):
+        out = out.drop(*[dim[k] for k in _dim_keys(on)])
     if rename:
-        for src, dst in rename.items():
-            out = out.withColumnRenamed(src, dst)
+        out = out.withColumnsRenamed(dict(rename))
     return out
 
 
@@ -120,13 +122,7 @@ def safe_merge_left(
     so pipelines continue like the pandas original.
     """
     dimp = _dim_prep(dim, keep_cols, dedup_dim)
-    if isinstance(on, Mapping):
-        dim_key_cols = list(on.values())
-    elif isinstance(on, str):
-        dim_key_cols = [on]
-    else:
-        dim_key_cols = list(on)
-
+    dim_key_cols = _dim_keys(on)
     if mode == "dim-unique":
         dup = (
             dimp.groupBy(*dim_key_cols)

@@ -1439,8 +1439,8 @@ def rouge_n(
     kernel (also under bleu_score); gram counts are deliberately
     re-derived per join side, not checkpointed -- a gram index is
     corpus-sized, and the r10 10x A/B showed materializing it loses at
-    scale and leaks session storage (see the materialize_counts note
-    in _pair_gram_stats_multi for the numbers).
+    scale and leaks session storage (see the re-derive note in
+    _pair_gram_stats_multi for the numbers).
     """
     p = pairs.select(F.col(ref_col).alias("ref_id"), F.col(cand_col).alias("cand_id"))
     agg = _pair_gram_stats(docs, p, int(n), id_col, text_col, "").select(
@@ -1603,8 +1603,6 @@ def _pair_gram_stats_multi(
     id_col: str,
     text_col: str,
     unit: str = "word",
-    materialize_counts: bool = False,
-    derive_counts: bool = False,
 ) -> DataFrame:
     """Per-(ref, cand) clipped n-gram overlap + side totals for EVERY
     requested n level in ONE pass -- the shared kernel under rouge_n
@@ -1710,144 +1708,27 @@ def _pair_gram_stats_multi(
     # BEFORE the compute-bound tokenize/gram stage and keeps the
     # optimizer from cloning the gram expression into a pushed-down
     # size() filter on the serial scan
-    if derive_counts:
-        # shared-suffix derivation (r11 A/B, verdict task 2): every
-        # n-gram (n < M) is the length-n PREFIX of exactly one M-gram,
-        # except the ones starting in the last M-1 positions, which
-        # have no M-gram extension.  So: explode ONLY the M-grams plus
-        # the <= M*(M-1)/2 boundary tail grams per doc (~1x the char
-        # stream instead of ~Mx), aggregate, then prefix-expand the
-        # M-gram counts into every lower level and re-aggregate.  The
-        # trade: a second (doc, n, gram) shuffle+aggregate over
-        # M x |distinct M-grams| rows -- wins only if within-doc M-gram
-        # repetition collapses the first aggregate enough to pay for
-        # the second pass.
-        #
-        # MEASURED AND REJECTED as the default (r11 interleaved A/B,
-        # noop sink, tuned session): sf0.1 min 5.27s derive vs 3.58s
-        # emit6 (1.47x SLOWER); 10x-dir pooled min over 6 reps 23.97s
-        # vs 19.06s (1.26x slower).  The corpus's ~240-char docs have
-        # almost no within-doc 6-gram repetition, so the first
-        # aggregate barely shrinks and the prefix re-expand pays a
-        # full extra shuffle+aggregate over ~the same row count.  The
-        # path stays as an opt-in flag (value-identical, pinned by
-        # test_chrf_derive_counts_equivalent) for corpora where
-        # repetition is real; llm_chrf keeps derive_counts=False.
-        if unit != "char" or levels != list(range(1, len(levels) + 1)):
-            raise ValueError(
-                "derive_counts needs contiguous char levels 1..M"
-            )
-        m = levels[-1]
-
-        def _base_and_boundary(s: Column) -> Column:
-            def _gram_struct(nn):
-                return lambda i: F.struct(
-                    F.lit(nn).cast("int").alias("n"),
-                    F.substr(s, i, F.lit(nn)).alias("g"),
-                )
-
-            base = F.when(
-                F.length(s) >= m,
-                F.transform(
-                    F.sequence(F.lit(1), F.length(s) - m + 1),
-                    _gram_struct(m),
-                ),
-            ).otherwise(empty)
-            bparts = []
-            for n in levels[:-1]:
-                # tail starts: positions past the last M-gram start
-                start = F.greatest(F.length(s) - m + 1, F.lit(0)) + 1
-                end = F.length(s) - n + 1
-                bparts.append(
-                    F.when(
-                        end >= start,
-                        F.transform(F.sequence(start, end), _gram_struct(n)),
-                    ).otherwise(empty)
-                )
-            return F.concat(base, *bparts)
-
-        raw = (
-            explode_nonempty(
-                docs.select(F.col(id_col).alias("__d"), F.col(text_col)),
-                ["__d"],
-                bind1(src, _base_and_boundary),
-                "__x",
-            )
-            .select(
-                "__d", F.col("__x.n").alias("__n"), F.col("__x.g").alias("__g")
-            )
-            .groupBy("__d", "__n", "__g")
-            .agg(F.count(F.lit(1)).cast("long").alias("__c"))
+    counts = (
+        explode_nonempty(
+            docs.select(F.col(id_col).alias("__d"), F.col(text_col)),
+            ["__d"],
+            bind1(src, _all_grams),
+            "__x",
         )
-        # prefix-expand M-gram counts into all lower levels; boundary
-        # partial counts (n < M) pass through to the re-aggregate
-        pass_through = F.array(
-            F.struct(
-                F.col("__n").alias("n"),
-                F.col("__g").alias("g"),
-                F.col("__c").alias("c"),
-            )
+        .select(
+            "__d", F.col("__x.n").alias("__n"), F.col("__x.g").alias("__g")
         )
-        prefixes = F.transform(
-            F.sequence(F.lit(1), F.lit(m)),
-            lambda nn: F.struct(
-                nn.cast("int").alias("n"),
-                F.col("__g").substr(F.lit(1), nn).alias("g"),
-                F.col("__c").alias("c"),
-            ),
-        )
-        counts = (
-            raw.select(
-                "__d",
-                F.explode(
-                    F.when(F.col("__n") == m, prefixes).otherwise(pass_through)
-                ).alias("__y"),
-            )
-            .select(
-                "__d",
-                F.col("__y.n").alias("__n"),
-                F.col("__y.g").alias("__g"),
-                F.col("__y.c").alias("__c"),
-            )
-            .groupBy("__d", "__n", "__g")
-            .agg(F.sum("__c").cast("long").alias("__c"))
-        )
-    else:
-        counts = (
-            explode_nonempty(
-                docs.select(F.col(id_col).alias("__d"), F.col(text_col)),
-                ["__d"],
-                bind1(src, _all_grams),
-                "__x",
-            )
-            .select(
-                "__d", F.col("__x.n").alias("__n"), F.col("__x.g").alias("__g")
-            )
-            .groupBy("__d", "__n", "__g")
-            .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-        )
+        .groupBy("__d", "__n", "__g")
+        .agg(F.count(F.lit(1)).cast("long").alias("__c"))
+    )
     # the counts table feeds BOTH pair sides (ref expansion + cand
     # meet), and Catalyst re-derives the scan+explode+aggregate chain
-    # per consumer.  materialize_counts=True localCheckpoints the
-    # aggregate once instead (serialized MEMORY_AND_DISK; the default
-    # deserialized level held 44M live rows at 10x and thrashed GC to
-    # death).  Measured r10, and REJECTED as the default: at sf0.1 it
-    # wins big (char 6-level 13.6-23.5s -> 2.2-2.8s, word 4-level
-    # 5.6-6.3s -> 0.9-1.5s, interleaved A/B), but at the 10x harness it
-    # LOSES everywhere (chrf 137s vs 81s re-derive, bleu 25 vs 18,
-    # rouge 15.5 vs 12, bleu_corpus 51 vs 21): pushing a corpus-scale
-    # aggregate through the storage layer beats recompute only at toy
-    # scale, and the blocks leak for the session lifetime (an operator
-    # cannot unpersist what its returned frame still references), so a
-    # long-lived session accumulates corpus-sized storage per eval
-    # query.  Re-derive is the 100 TB posture; the flag stays for the
-    # reproducible A/B.
-    if materialize_counts:
-        from pyspark.storagelevel import StorageLevel
-
-        counts = counts.localCheckpoint(
-            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
+    # per consumer.  That is deliberate: localCheckpointing it measured
+    # (interleaved A/B) a win at sf0.1 but a LOSS at the 10x harness
+    # (chrf 137s vs 81s re-derive, bleu 25 vs 18, rouge 15.5 vs 12,
+    # bleu_corpus 51 vs 21), and the checkpoint blocks leak
+    # for the session lifetime, since an operator cannot unpersist what
+    # its returned frame still references.
     # clipped overlap: expand the ref side once, meet the cand side's
     # counts INNER on (doc, level, gram) -- only common grams ride.
     # merge (sort-merge) hint on the counts side: the gram-counts table
@@ -2229,7 +2110,6 @@ def chrf_score(
     text_col: str = "text",
     ref_col: str = "ref_id",
     cand_col: str = "cand_id",
-    derive_counts: bool = False,
 ) -> DataFrame:
     """chrF (Popovic 2015) between (reference, candidate) pairs: the
     character-n-gram F-score that complements word-level BLEU/ROUGE --
@@ -2261,7 +2141,6 @@ def chrf_score(
         id_col,
         text_col,
         unit="char",
-        derive_counts=derive_counts,
     )
     precs = [
         F.when(

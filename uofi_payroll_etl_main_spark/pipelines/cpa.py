@@ -16,12 +16,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import expressions as E
-from ..aggregates import mode_agg
-from ..dedup import INGEST_ORDER_COL, keep_first, with_ingest_order
-from ..joins import broadcast_left_join, dict_map_join
+from ..dedup import INGEST_ORDER_COL, keep_first
+from ..joins import broadcast_left_join
 from ..predicates import between_dates, fiscal_year_bounds
 from ..report import RunReport, check_schema
 from ..setops import union_by_name
+from .common import fill_time_entry, ingest_order
 
 # Ref :458-464 -- expected certification schema (V2 check, warn-only).
 EXPECTED_CERT_COLUMNS = [
@@ -73,57 +73,37 @@ def run_cpa(
 
     # E1 header trim -> U1 union-by-name (ref :433-436).  Ingest order is
     # captured per-source BEFORE the union so keep-first dedup later
-    # reproduces "BW file rows precede MN file rows" exactly; the second
-    # source gets an offset beyond monotonically_increasing_id's range.
-    def _tagged(frame: DataFrame, src_idx: int) -> DataFrame:
-        # Respect a caller-supplied explicit order column (gate queries
-        # derive one from a data column for cross-engine determinism).
-        # Cast to long so (a) keep-first never orders lexicographically
-        # on a string-typed order column and (b) both union sides build
-        # the same struct<src:int,row:long> type regardless of source.
-        if INGEST_ORDER_COL in frame.columns:
-            report.warn("run_cpa: using caller-supplied __ingest_order as dedup order")
-            base = frame.withColumn(INGEST_ORDER_COL, F.col(INGEST_ORDER_COL).cast("long"))
-        else:
-            base = with_ingest_order(frame)
-        return base.withColumn(
-            INGEST_ORDER_COL,
-            F.struct(F.lit(src_idx).alias("src"), F.col(INGEST_ORDER_COL).alias("row")),
+    # reproduces "BW file rows precede MN file rows" exactly: the order
+    # is struct<src:int,row:long>, the same type on both union sides.
+    def _source(frame: DataFrame, src_idx: int) -> DataFrame:
+        order = F.struct(F.lit(src_idx).alias("src"), ingest_order(frame, report, "run_cpa").alias("row"))
+        return frame.select(
+            *[F.col(c).alias(c.strip()) for c in frame.columns if c != INGEST_ORDER_COL],
+            order.alias(INGEST_ORDER_COL),
         )
 
-    bw = _tagged(E.clean_headers(cert_bw), 0)
-    mn = _tagged(E.clean_headers(cert_mn), 1)
-    df = union_by_name(bw, mn)
-
-    # E8 coerce parse + P6 fiscal-year filter (ref :438-452).
-    df = df.withColumn("TRAN_CREATE_DT", E.to_ts_coerce("TRAN_CREATE_DT"))
-    fy_start, fy_end = fiscal_year_bounds(fy_end_year)
-    df = df.filter(between_dates("TRAN_CREATE_DT", fy_start, fy_end))
+    df = union_by_name(_source(cert_bw, 0), _source(cert_mn, 1))
 
     # V2 schema contract check, warn-only (ref :457-471).
     check_schema(df.drop(INGEST_ORDER_COL), EXPECTED_CERT_COLUMNS, report, "cpa_cert")
 
-    # E4/E6 derived keys + E14 whole-frame strip (ref :473-482).
-    df = (
-        df.withColumn(
-            "TS-Org Code", E.concat_key(E.ensure_string("JOB_TS_COAS"), E.ensure_string("JOB_TS_ORGN"))
-        )
-        .withColumn("Dept TS-Org", E.prefix("TS-Org Code", 5))
-    )
-    # E14 touches only string-typed columns; the struct-typed order column
-    # passes through untouched.
-    df = E.strip_all_strings(df)
-    df = (
-        df.withColumn("JOB_ECLS", E.ensure_string("JOB_ECLS"))
-        .withColumn("PAY_ID", E.ensure_string("PAY_ID"))
-        .withColumn("UIN Job", E.concat_key(E.ensure_string("UIN"), E.ensure_string("JOB")))
-    )
+    # E14 whole-frame strip, E8 coerce parse and E4/E6 derived keys in one
+    # projection (ref :438, :473-482), then the P6 fiscal-year filter
+    # (ref :443-452).  The E14 strip covers the derived prefix too; the
+    # struct-typed order column passes through untouched.
+    ts_org_code = E.concat_key(E.ensure_string("JOB_TS_COAS"), E.ensure_string("JOB_TS_ORGN"))
+    df = df.withColumns({
+        **E.stripped_strings(df),
+        "TRAN_CREATE_DT": E.to_ts_coerce("TRAN_CREATE_DT"),
+        "JOB_ECLS": E.ensure_string("JOB_ECLS"),
+        "PAY_ID": E.ensure_string("PAY_ID"),
+        "TS-Org Code": ts_org_code,
+        "Dept TS-Org": E.ws_trim(E.prefix(ts_org_code, 5)),
+        "UIN Job": E.concat_key(E.ensure_string("UIN"), E.ensure_string("JOB")),
+    }).filter(between_dates("TRAN_CREATE_DT", *fiscal_year_bounds(fy_end_year)))
 
-    ot = overtime.withColumn("Job Eclass", E.ensure_string("Job Eclass")).withColumn(
-        "Pay ID", E.ensure_string("Pay ID")
-    )
-
-    # J5 org (rename -> TS-Org Name), J6 dept on the 5-char prefix key.
+    # J5 org (rename -> TS-Org Name), J6 dept on the 5-char prefix key,
+    # J7 time-entry row join (ref :487-515), then the time-entry fill.
     df = broadcast_left_join(
         df, ts_org, "TS-Org Code", keep_cols=["TS-Org Code", "TS-Org Title"],
         rename={"TS-Org Title": "TS-Org Name"},
@@ -133,30 +113,18 @@ def run_cpa(
         keep_cols=["TS-Org Dept Code", "TS-Org Dept Title"],
         rename={"TS-Org Dept Title": "TS-Org Department Name"},
     )
-
-    # J7 time-entry row join (ref :511-515).
     df = broadcast_left_join(
         df, te_m, "UIN Job",
         keep_cols=["UIN Job", "TE M", "Time Entry Method", "Time Entry Type"],
     )
-
-    # A1/J9/E10 time-entry mode fill (ref :517-533).
-    te = te_m.select(
-        E.ensure_string("TE M").alias("TE M"),
-        E.ensure_string("Time Entry Method").alias("Time Entry Method"),
-    ).filter(F.col("TE M").isNotNull() & F.col("Time Entry Method").isNotNull())
-    te_map = mode_agg(te, "TE M", "Time Entry Method", out_col="__mapped_te")
-    df = df.withColumn("TE M", E.ensure_string("TE M"))
-    df = E.ensure_column(df, "Time Entry")
-    df = df.withColumn("Time Entry", E.ensure_string("Time Entry"))
-    df = dict_map_join(df, te_map, "TE M", "__mapped_te")
-    df = df.withColumn("Time Entry", E.keep_or_replace("Time Entry", "__mapped_te")).drop(
-        "__mapped_te"
-    )
+    df = fill_time_entry(df, te_m)
 
     # J8 composite-key overtime join (ref :535-543).  Dim-side keys are
     # dropped post-join: the reference instead lets a duplicate 'Pay ID'
     # arise and drops the second occurrence at :591 -- same result.
+    ot = overtime.withColumns(
+        {"Job Eclass": E.ensure_string("Job Eclass"), "Pay ID": E.ensure_string("Pay ID")}
+    )
     df = broadcast_left_join(
         df, ot, {"JOB_ECLS": "Job Eclass", "PAY_ID": "Pay ID"},
         keep_cols=["Job Eclass", "Pay ID", "Overtime FLSA", "Job Detail E-Class Long Desc"],
@@ -176,12 +144,8 @@ def run_cpa(
     )
     df = keep_first(df, ["UIN Job"], F.col(INGEST_ORDER_COL))
 
-    # E7 college split with no-hyphen guard (ref :549-560).
-    code, name = E.split_first("COLLEGE")
-    df = df.withColumn("College Code", code).withColumn("College Name", name)
-
-    # E13 bulk rename -> P8 20-col select -> P10 dup resolution
-    # (ref :563-591).
-    df = E.rename_columns(df.drop(INGEST_ORDER_COL), CPA_RENAMES)
-    out = df.select(*[c for c in CPA_OUTPUT_COLUMNS if c in df.columns])
-    return out, report
+    # E7 college split with no-hyphen guard (ref :549-560), E13 bulk
+    # rename and P8 20-col select (ref :563-591), in one projection.
+    cols = {n: F.col(c) for c, n in zip(data_cols, E.renamed(data_cols, CPA_RENAMES))}
+    cols["College Code"], cols["College Name"] = E.split_first("COLLEGE")
+    return df.select(*[cols[c].alias(c) for c in CPA_OUTPUT_COLUMNS if c in cols]), report

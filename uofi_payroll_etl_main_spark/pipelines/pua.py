@@ -20,12 +20,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import expressions as E
-from ..aggregates import mode_agg
-from ..dedup import INGEST_ORDER_COL, dedup_keys_tolerant, with_ingest_order
-from ..joins import dict_map_join, safe_merge_left
+from ..dedup import INGEST_ORDER_COL, dedup_keys_tolerant
+from ..joins import safe_merge_left
 from ..report import RunReport
+from .common import fill_time_entry, ingest_order
 
-# Ref :330-357 -- the 26-column PUA output contract (dst -> src).
+# Ref :330-357 -- the 26-column PUA output contract (dst -> src), with
+# the final renames of :375-380 applied to the dst names.
 PUA_COL_MAP = OrderedDict(
     [
         ("UIN", "UIN"),
@@ -38,7 +39,7 @@ PUA_COL_MAP = OrderedDict(
         ("College Name", "College Name"),
         ("College", "College"),
         ("TS COA", "TS COA"),
-        ("TS Org", "TS ORG"),
+        ("TS ORG", "TS ORG"),
         ("TS-Org Code", "TS-Org Code"),
         ("TS-Org Title", "TS-Org Title"),
         ("Dept Code", "DEPT Code"),
@@ -52,7 +53,7 @@ PUA_COL_MAP = OrderedDict(
         ("Earn Code", "Earn Code"),
         ("Earn Code Description", "DESCRIPTION"),
         ("Adjustment Reason Code", "ADJ Reason Code"),
-        ("Adjustment Reason", "ADJ Reason DESC"),
+        ("Adjustment Reason Description", "ADJ Reason DESC"),
         ("Calc Date", "Calc Date"),
     ]
 )
@@ -74,7 +75,16 @@ RENAME_NORMALIZE = {
     "Adj Reason": "ADJ Reason DESC",
 }
 
-FINAL_RENAMES = {"TS Org": "TS ORG", "Adjustment Reason": "Adjustment Reason Description"}
+# Ref :210-223, :238-254 -- E2 string cast + trim and E3 Excel-float
+# repair of the source columns the derived keys read.
+NORMALIZE = {
+    **dict.fromkeys(
+        ["TS COA", "TS ORG", "Department Name", "Year", "Pay ID", "Pay #", "Seq #",
+         "College Code", "College Name"],
+        E.ensure_string,
+    ),
+    **dict.fromkeys(["DEPT Code", "POSN", "SUFF"], E.strip_decimal_str),
+}
 
 
 def run_pua(
@@ -86,40 +96,31 @@ def run_pua(
     report: RunReport | None = None,
 ) -> tuple[DataFrame, RunReport]:
     report = report or RunReport()
-    # An input that already carries INGEST_ORDER_COL supplies its own
-    # explicit row order (the gate queries derive one from a data column
-    # so Spark and the DuckDB oracle agree exactly); otherwise capture
-    # physical read order at the source edge.  The supplied column is
-    # cast to long: a string-typed order would sort lexicographically
-    # ('10' < '2') and silently flip keep-first winners.
-    if INGEST_ORDER_COL in pua.columns:
-        report.warn("run_pua: using caller-supplied __ingest_order as dedup order")
-        src = pua.withColumn(INGEST_ORDER_COL, F.col(INGEST_ORDER_COL).cast("long"))
-    else:
-        src = with_ingest_order(pua)
-    df = E.clean_headers(src)
 
-    # Derived keys (ref :238-254); F.concat null-propagates like pandas `+`.
-    for c in ["TS COA", "TS ORG", "Department Name", "Year", "Pay ID", "Pay #", "Seq #",
-              "College Code", "College Name"]:
-        if c in df.columns:
-            df = df.withColumn(c, E.ensure_string(c))
-    df = (
-        df.withColumn("TS-Org Code", E.concat_key("TS COA", "TS ORG"))
-        .withColumn("DEPT Code", E.strip_decimal_str("DEPT Code"))
-        .withColumn("TS-Org Department Code", E.concat_key("TS COA", "DEPT Code"))
-        .withColumn("E-Class", E.ensure_string("ECLS DESC"))
-        .withColumn("Pay Event", E.concat_plain("Year", "Pay ID", "Pay #", "Seq #"))
-        .withColumn("POSN", E.strip_decimal_str("POSN"))
-        .withColumn("SUFF", E.strip_decimal_str("SUFF"))
-        .withColumn("Job Number", E.concat_key("POSN", "SUFF"))
-        .withColumn("College", E.concat_key("College Code", "College Name"))
+    # E1 header trim, header typo unification (ref :205-207, :256-261),
+    # E2/E3 normalisation and the keep-first order column, in one
+    # projection straight over the source.
+    order = ingest_order(pua, report, "run_pua")
+    raw = [c for c in pua.columns if c != INGEST_ORDER_COL]
+    names = E.renamed([c.strip() for c in raw], RENAME_NORMALIZE)
+    df = pua.select(
+        *[NORMALIZE.get(n, F.col)(c).alias(n) for c, n in zip(raw, names)],
+        order.alias(INGEST_ORDER_COL),
     )
 
-    # Header typo unification (ref :256-261), tolerant of absent sources.
-    df = E.rename_columns(df, {k: v for k, v in RENAME_NORMALIZE.items() if k in df.columns})
+    # Derived keys (ref :238-254) over the normalised columns; F.concat
+    # null-propagates like pandas `+`.
+    df = df.withColumns({
+        "TS-Org Code": E.concat_key("TS COA", "TS ORG"),
+        "TS-Org Department Code": E.concat_key("TS COA", "DEPT Code"),
+        "E-Class": E.ensure_string("ECLS DESC"),
+        "Pay Event": E.concat_plain("Year", "Pay ID", "Pay #", "Seq #"),
+        "Job Number": E.concat_key("POSN", "SUFF"),
+        "College": E.concat_key("College Code", "College Name"),
+    })
 
-    # J1 org, J2 dept (differing key names) + title coalesce, J3 overtime.
+    # J1 org, J2 dept (differing key names), J3 overtime, then the
+    # time-entry fill (ref :263-299).
     df = safe_merge_left(df, ts_org, "TS-Org Code", keep_cols=["TS-Org Code", "TS-Org Title"])
     df = safe_merge_left(
         df,
@@ -127,7 +128,6 @@ def run_pua(
         {"TS-Org Department Code": "TS-Org Dept Code"},
         keep_cols=["TS-Org Dept Code", "TS-Org Dept Title"],
     )
-    df = df.withColumn("TS-Org Dept Title", E.coalesce_cols("TS-Org Dept Title", "Department Name"))
     df = safe_merge_left(
         df,
         overtime,
@@ -136,49 +136,38 @@ def run_pua(
         rename={"Overtime FLSA": "Overtime"},
         drop_dim_keys=True,
     )
+    df = fill_time_entry(df, te_m)
 
-    # A1 mode lookup + J9 dict-map join + E10 fill (ref :282-299).
-    te = te_m.select(E.ensure_string("TE M").alias("TE M"),
-                     E.ensure_string("Time Entry Method").alias("Time Entry Method"))
-    te = te.filter(F.col("TE M").isNotNull() & F.col("Time Entry Method").isNotNull())
-    te_map = mode_agg(te, "TE M", "Time Entry Method", out_col="__mapped_te")
-    df = df.withColumn("TE M", E.ensure_string("TE M"))
-    df = E.ensure_column(df, "Time Entry")
-    df = dict_map_join(df, te_map, "TE M", "__mapped_te")
-    df = df.withColumn("Time Entry", E.keep_or_replace("Time Entry", "__mapped_te")).drop(
-        "__mapped_te"
-    )
-
-    # P8 projection -> D2 keyed dedup (deterministic keep-first via ingest
-    # order; ref :301-317).
+    # P8 projection, carrying J2's title coalesce (ref :273-274,
+    # :301-312) -> D2 keyed dedup (deterministic keep-first via ingest
+    # order; ref :314-317).
+    dept_title = E.coalesce_cols("TS-Org Dept Title", "Department Name").alias("TS-Org Dept Title")
     present = [c for c in SOURCE_FIELDS if c in df.columns]
-    df_fin = df.select(*present, INGEST_ORDER_COL)
-    missing_keys = [k for k in ("UIN", "Pay Event", "Job Number") if k not in df_fin.columns]
-    for k in missing_keys:
-        report.warn(f"missing key for dedupe: {k}")
-    df_fin = dedup_keys_tolerant(
-        df_fin, ["UIN", "Pay Event", "Job Number"], order_col=INGEST_ORDER_COL
-    ).drop(INGEST_ORDER_COL)
+    df = df.select(*[dept_title if c == "TS-Org Dept Title" else c for c in present], INGEST_ORDER_COL)
+    for k in ("UIN", "Pay Event", "Job Number"):
+        if k not in df.columns:
+            report.warn(f"missing key for dedupe: {k}")
+    df = dedup_keys_tolerant(df, ["UIN", "Pay Event", "Job Number"], order_col=INGEST_ORDER_COL)
 
-    # E16 type normalization + E11 ADJ default (ref :319-328).
-    for c in df_fin.columns:
-        if c != "Calc Date":
-            df_fin = df_fin.withColumn(c, E.ensure_string(c))
-    if "Calc Date" in df_fin.columns:
-        df_fin = df_fin.withColumn("Calc Date", E.to_ts_coerce("Calc Date"))
-    if "ADJ Reason Code" in df_fin.columns and "ADJ Reason DESC" in df_fin.columns:
-        code, desc = E.null_blank_default("ADJ Reason Code", "ADJ Reason DESC")
-        # both in ONE projection: chained withColumn would overwrite the
-        # code first, so the desc's blankish-test would see 'INT' and
-        # never fire (ref :324-328 sets the pair from the original value)
-        df_fin = df_fin.withColumns({"ADJ Reason Code": code, "ADJ Reason DESC": desc})
+    # E16 type normalization + E11 ADJ default (ref :319-328).  The
+    # default reads the E16 expressions of BOTH columns in the same
+    # projection: setting the code first would make the desc's
+    # blankish-test see 'INT' and never fire (ref :324-328 sets the pair
+    # from the original value).
+    fin = {
+        c: E.to_ts_coerce(c) if c == "Calc Date" else E.ensure_string(c)
+        for c in df.columns
+        if c != INGEST_ORDER_COL
+    }
+    if "ADJ Reason Code" in fin and "ADJ Reason DESC" in fin:
+        fin["ADJ Reason Code"], fin["ADJ Reason DESC"] = E.null_blank_default(
+            fin["ADJ Reason Code"], fin["ADJ Reason DESC"]
+        )
+    df = df.select(*[col.alias(c) for c, col in fin.items()])
 
-    # E15 output contract with null padding (ref :330-368).
-    out, padded = E.output_contract(df_fin, PUA_COL_MAP)
+    # E15 output contract with null padding -> final strip/cast (ref
+    # :330-374).
+    out, padded = E.output_contract(df, PUA_COL_MAP)
     if padded:
         report.missing_output_sources["pua"] = padded
-
-    # Final strip/cast + renames (ref :370-380).
-    out = E.finalize_output(out, date_cols=["Calc Date"])
-    out = E.rename_columns(out, FINAL_RENAMES)
-    return out, report
+    return E.finalize_output(out, date_cols=["Calc Date"]), report
